@@ -23,29 +23,8 @@ object BenchKG {
     if (sys.env.contains("GRAFT_NO_INFER_GEN"))
       builder.config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    // cluster-posture knobs via env -> spark.graft.* confs -> Config
-    // (e.g. GRAFT_CC_RELIABLE_EVERY=3 GRAFT_CC_DIR=target/ccbench measures
-    // the durable-CC checkpoint overhead at bench scale, CC-only)
-    sys.env.get("GRAFT_CC_RELIABLE_EVERY")
-      .foreach(v => builder.config("spark.graft.ccReliableEvery", v))
-    sys.env.get("GRAFT_CC_DIR")
-      .foreach(v => builder.config("spark.graft.ccRoundsDir", v))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if (mode == "probe2") {
-      // EXACT replica of Bench.cpuProbe (xxhash64∘sha2 over 2M rows) so a
-      // standalone run is comparable to the per-trial hw_probe_sec history
-      // in BENCH_r*.json (round-4 t32 reference: 0.27-0.34 s)
-      for (i <- 1 to trials) {
-        val t0 = System.nanoTime()
-        spark.range(0, 2000000L, 1, spark.sparkContext.defaultParallelism * 4)
-          .select(sum(pmod(xxhash64(sha2(col("id").cast("string"), 256)), lit(1000000007L))).as("s"))
-          .head()
-        println(f"[probe2] threads=$threads trial=$i wall=${(System.nanoTime() - t0) / 1e9}%.3f s")
-      }
-      spark.stop()
-      return
-    }
     if (mode == "probe") {
       // workload-representative hardware probe: string materialization +
       // regex + shuffle-free agg, same op mix as extraction (memory-bandwidth
@@ -125,27 +104,7 @@ object BenchKG {
     val turns = graft.ingest.Transcripts.stableTurns(tr)
     def force(df: org.apache.spark.sql.DataFrame): Long =
       df.agg(sum(length(col("text"))) + sum(length(col("role")))).head().getLong(0)
-    // V1: inline window row_number (Spark 4 plans WindowGroupLimit)
-    val v1 = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("conv_id", "turn_idx").orderBy(col("ts"), col("text"))
-      tr.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
-    }
-    // V2: the shipped stableTurns — SAME window shape as V1 (it replaced an
-    // earlier min_by(struct) variant after this bench showed the window wins)
-    val v2 = graft.ingest.Transcripts.stableTurns(tr)
-    // V3: scalar two-phase (min ts, then min text-hash) + dropDuplicates
-    val v3 = {
-      val k = Seq("conv_id", "turn_idx")
-      val minTs = tr.groupBy(k.map(col): _*).agg(min(col("ts")).as("_mts"))
-      val c1 = tr.join(minTs, k).filter(col("ts") === col("_mts"))
-      val minH = c1.groupBy(k.map(col): _*).agg(min(xxhash64(col("text"))).as("_mh"))
-      c1.join(minH, k).filter(xxhash64(col("text")) === col("_mh"))
-        .dropDuplicates(k).drop("_mts", "_mh")
-    }
-    t("v1-window-inline") { force(v1) }
-    t("v2-stableTurns") { force(v2) }
-    t("v3-scalar-2phase") { force(v3) }
+    t("stableTurns") { force(turns) }
     t("extract-no-dedup") { graft.extract.Extraction.triplesRaw(tr).count() }
     t("extract-composed-nocache") { graft.extract.Extraction.triplesRaw(turns).count() }
     val raw0 = graft.extract.Extraction.triplesRaw(turns)

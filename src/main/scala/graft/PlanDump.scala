@@ -11,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir, suffix, list) = args.take(4)
+    require(args.length == 4,
+      "usage: PlanDump <sfDir> <outDir> <suffix> q1,q2,...")
+    val Array(sfDir, outDir, suffix, list) = args
     val names = list.split(",").toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = SparkSession.builder()

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 import org.apache.spark.sql.expressions.Window
 import graft.extract.Extraction
 import graft.fixtures.TranscriptGen
@@ -25,7 +26,7 @@ object SparkEntry {
   /** Flagship: full KG-construction pipeline on synthetic transcripts. */
   def entry(spark: SparkSession): DataFrame = {
     val tr = TranscriptGen.transcripts(spark, nConvs = 300)
-    // spark.graft.* session confs (e.g. checkpointDir, ccReliableEvery)
+    // spark.graft.* session confs (e.g. checkpointDir, jaccardThreshold)
     // flow into the pipeline — the spark-submit deployment surface
     KGPipeline.run(spark, tr, KGPipeline.Config.fromSession(spark)).tripleSet
   }
@@ -195,7 +196,7 @@ object SparkEntry {
       memoResults = Map.empty
       memoFrames = Map.empty
     }
-  /** Session-scoped shared-stage memo: build once, lazy-localCheckpoint
+  /** Session-scoped shared-stage memo: build once, lazy lineage cut
     * (first consumer materializes, later consumers reuse the cut). */
   private def memoDF(s: SparkSession, dir: String, key: String)
                     (build: => DataFrame): DataFrame =
@@ -204,7 +205,7 @@ object SparkEntry {
       memoFrames.get((key, dir)) match {
         case Some(df) => df
         case None =>
-          val df = build.localCheckpoint(false)
+          val df = Lineage.cut(build)
           memoFrames += ((key, dir) -> df)
           df
       }
@@ -520,10 +521,10 @@ object SparkEntry {
       // (#labels × #preds) each drag the full cached-pipeline plan tree
       // into the validation join — cut, the kg26 static plan collapses
       // from ~13k printed lines / 341 scans to the anti-join itself
-      val types = graft.graph.EntityTyping.plurality(mentions, "entity", "etype")
-        .localCheckpoint(false)
+      val types = Lineage.cut(
+        graft.graph.EntityTyping.plurality(mentions, "entity", "etype"))
       graft.schemadisc.Validation.requiredViolations(t, types,
-        r.nodeSchema.localCheckpoint(false))
+        Lineage.cut(r.nodeSchema))
     }),
 
     // entity-type induction: plurality vote over the typed mention slots
@@ -686,9 +687,8 @@ object SparkEntry {
       // lineage cut: encodeTriples reads its input four ways (subj ∪ obj
       // entity dict, predicate dict, and the encoded join probe) — without
       // the cut the extraction chain replays per consumer
-      val tr = rawTriples(s, dir)
-        .select(col("subj_raw").as("subj"), col("pred"), col("obj_raw").as("obj"))
-        .localCheckpoint(false)
+      val tr = Lineage.cut(rawTriples(s, dir)
+        .select(col("subj_raw").as("subj"), col("pred"), col("obj_raw").as("obj")))
       val (_, _, enc) = graft.graph.Dictionary.encodeTriples(
         tr, "subj", "pred", "obj")
       enc.groupBy("s_id", "p_id", "o_id").agg(count(lit(1)).as("n_obs"))

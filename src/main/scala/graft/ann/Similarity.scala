@@ -2,6 +2,7 @@ package graft.ann
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 import org.apache.spark.sql.expressions.Window
 
 /**
@@ -84,7 +85,7 @@ object Similarity {
     // lineage cut: the signature index feeds capBuckets (count + semi)
     // and both join sides — the same four-consumer shape as
     // [[graft.textops.Dedup.embeddingPairs]]; cut once, compute once
-    val indexed0 = df.select(col(idCol).as("_id"), col(vecCol).as("_v"),
+    val indexed0 = Lineage.cut(df.select(col(idCol).as("_id"), col(vecCol).as("_v"),
       explode(array((0 until tables).map(t =>
         struct(lit(t).as("t"),
           org.apache.spark.sql.graftfns.VectorExpressions
@@ -93,8 +94,7 @@ object Similarity {
       // repartition on the bucket key before the cut (the embeddingPairs
       // posture): spreads a single-split corpus across the shuffle
       // partitions instead of one task
-      .repartition(col("_t"), col("_sig"))
-      .localCheckpoint(false)
+      .repartition(col("_t"), col("_sig")))
     val indexed = graft.link.MinHashBlocking.capBuckets(
       indexed0, Seq("_t", "_sig"), maxBucket, pairBudget)
     val a = indexed.select(col("_t"), col("_sig"), col("_id").as("id_a"), col("_v").as("_v_a"))

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Temporal conflict resolution over a provenance-annotated triple set —
@@ -39,9 +40,8 @@ object ConflictResolution {
     // lineage cut: prov feeds both the functional (semi) and pass-through
     // (anti) slices — without it the provenance aggregation's upstream
     // chain replays once per slice (kg19 measured 2 full chains)
-    val prov = provenance.select(col("subj"), col("pred"), col("obj"),
-      col("n_observations"), col("last_turn"))
-      .localCheckpoint(false)
+    val prov = Lineage.cut(provenance.select(col("subj"), col("pred"), col("obj"),
+      col("n_observations"), col("last_turn")))
     val preds = functionalPreds.select(col("pred")).distinct()
     // lexicographic struct min == ORDER BY last_turn DESC,
     // n_observations DESC, obj ASC LIMIT 1 — numeric keys sign-flipped

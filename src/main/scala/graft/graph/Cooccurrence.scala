@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * PMI-weighted entity co-occurrence — the classic second edge source for
@@ -49,7 +50,7 @@ object Cooccurrence {
     // consumed four times below (N, entity counts, both self-join sides):
     // materialize once, cut the upstream extraction lineage — same posture
     // as ConnectedComponents' per-round cuts
-    val m = guarded.localCheckpoint(false)
+    val m = Lineage.cut(guarded)
 
     val nCtx = m.select("_ctx").distinct().count()
     val entCnt = m.groupBy(col("_ent")).agg(count(lit(1)).as("_ne"))

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Dense dictionary encoding of a string-keyed KG: deterministic
@@ -46,13 +47,12 @@ object Dictionary {
     val np =
       if (partitions > 0) partitions
       else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val ranged = values
+    val ranged = Lineage.cut(values
       .select(col(valueCol).as("value"))
       .filter(col("value").isNotNull)
       .distinct()
       .repartitionByRange(np, col("value"))
-      .withColumn("_p", spark_partition_id())
-      .localCheckpoint(false)
+      .withColumn("_p", spark_partition_id()))
     // one tiny row per non-empty partition; prefix-sum on the driver
     val counts = ranged.groupBy("_p").agg(count(lit(1)).as("_n"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Deterministic GraphSAGE-style ego-net sampling over the constructed
@@ -32,38 +33,42 @@ import org.apache.spark.sql.functions._
  */
 object EgoNets {
 
-  /** @param cutLineage checkpoint each hop (production posture); false
-    *                    keeps the raw per-hop plan visible for plan
-    *                    audits/tests — output identical. */
   def sample(edges: DataFrame, seedFraction: Double, fanouts: Seq[Int],
-             salt: String = "graft", cutLineage: Boolean = true): DataFrame = {
+             salt: String = "graft"): DataFrame = {
     require(fanouts.nonEmpty && fanouts.forall(_ > 0), "need positive fanouts")
     val e = edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull
         && col("src") =!= col("dst"))
-    val und = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(false)
+    val und = Lineage.cut(
+      e.unionByName(e.select(col("dst").as("src"), col("src").as("dst"))).distinct())
     val nodes = und.select(col("src").as("node")).distinct()
     val seeds = graft.textops.Sampling.hashSample(nodes, "node", seedFraction, salt)
       .select(col("node").as("seed"))
     var frontier = seeds.withColumn("node", col("seed"))
     var out: Option[DataFrame] = None
     fanouts.zipWithIndex.foreach { case (f, i) =>
-      val key = md5(concat_ws("|", lit(salt), col("seed"), col("src"), col("dst")))
       // lineage cut per hop (the KHop posture): `picked` feeds both the
       // output union and the next frontier — without it the hop branches
       // re-evaluate the whole prior join chain
-      val hopRaw = frontier
-        .join(und, frontier("node") === und("src"))
-        .select(col("seed"), col("src"), col("dst"))
-        .withColumn("_rn", row_number().over(
-          Window.partitionBy(col("seed"), col("src")).orderBy(key)))
-        .filter(col("_rn") <= f)
-        .select(col("seed"), lit(i + 1).as("hop"), col("src"), col("dst"))
-      val picked = if (cutLineage) hopRaw.localCheckpoint(false) else hopRaw
+      val picked = Lineage.cut(hopFrame(frontier, und, salt, f, i + 1), i + 1)
       out = Some(out.fold(picked)(_.unionByName(picked)))
       frontier = picked.select(col("seed"), col("dst").as("node")).distinct()
     }
     out.get
+  }
+
+  /** One hop: expand each (seed, node) of `frontier` over `und`, keeping
+    * at most `fanout` neighbors per (seed, src) by md5 decision key.
+    * Returns (seed, hop, src, dst). */
+  private[graft] def hopFrame(frontier: DataFrame, und: DataFrame, salt: String,
+                              fanout: Int, hop: Int): DataFrame = {
+    val key = md5(concat_ws("|", lit(salt), col("seed"), col("src"), col("dst")))
+    frontier
+      .join(und, frontier("node") === und("src"))
+      .select(col("seed"), col("src"), col("dst"))
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy(col("seed"), col("src")).orderBy(key)))
+      .filter(col("_rn") <= fanout)
+      .select(col("seed"), lit(hop).as("hop"), col("src"), col("dst"))
   }
 }

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Per-entity serving summary ("entity cards") over a provenance-annotated
@@ -33,10 +34,9 @@ object EntityCards {
     // lineage cut: prov feeds the seen union (2×), the out-side rollup and
     // the in-side rollup — four consumers; without it the provenance
     // chain replays per consumer (kg20 measured 4 full upstream chains)
-    val prov = provenance.select(col("subj"), col("pred"), col("obj"),
+    val prov = Lineage.cut(provenance.select(col("subj"), col("pred"), col("obj"),
         col("first_turn"), col("last_turn"))
-      .filter(col("subj").isNotNull && col("obj").isNotNull)
-      .localCheckpoint(false)
+      .filter(col("subj").isNotNull && col("obj").isNotNull))
 
     val seen = prov.select(col("subj").as("entity"),
         col("first_turn"), col("last_turn"))

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * HITS (hubs & authorities) over the materialized entity graph — the
@@ -42,17 +43,13 @@ import org.apache.spark.sql.functions._
  *    loop composes into ONE Spark job with zero per-round driver
  *    round-trips (same shape as [[PageRank]]: only convergence-checked
  *    loops like ConnectedComponents need per-round actions);
- *  - lineage is cut every round (lazy localCheckpoint) so the composed
- *    plan stays O(1) per iteration; pass [[PageRank.Reliable]]-style
- *    `reliable` to write through durable parquet every `every` rounds on
- *    a real cluster.
+ *  - lineage is cut every round (lazy) so the composed plan stays O(1)
+ *    per iteration; the cut policy, durable posture included, is
+ *    [[graft.operators.Lineage]].
  * Nothing node- or edge-sized ever reaches the driver; `run` performs no
  * driver action at all (the edge checkpoint is lazy).
  */
 object Hits {
-
-  /** Durable-checkpoint config for cluster runs (see PageRank.Reliable). */
-  final case class Reliable(dir: String, every: Int = 5)
 
   /**
    * @param edges      two columns `src`, `dst` (any orderable type);
@@ -62,24 +59,13 @@ object Hits {
    *         dst, scores rounded to 6 dp at the END only (intermediate
    *         math is full double precision; each column sums to ~1).
    */
-  def run(edges: DataFrame, iterations: Int = 5,
-          reliable: Option[Reliable] = None): DataFrame = {
+  def run(edges: DataFrame, iterations: Int = 5): DataFrame = {
     require(iterations >= 1, s"iterations $iterations")
 
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(false)
-    val nodes = e.select(col("src").as("node"))
+    val e = Lineage.cut(edges.select(col("src"), col("dst")).distinct())
+    val nodes = Lineage.cut(e.select(col("src").as("node"))
       .union(e.select(col("dst")))
-      .distinct()
-      .localCheckpoint(false)
-
-    def cut(df: DataFrame, round: Int, half: String): DataFrame = reliable match {
-      case Some(r) if round % r.every == 0 =>
-        val p = s"${r.dir}/hits_${half}_iter_$round"
-        df.write.mode("overwrite").parquet(p)
-        df.sparkSession.read.parquet(p)
-      case _ => df.localCheckpoint(false)
-    }
+      .distinct())
 
     /** One half-step: score mass flows across `e` from `fromSide` onto
       * `toSide`, then L1-normalizes. `scores` is (node, s). */
@@ -89,7 +75,7 @@ object Hits {
         .groupBy(e(toSide).as("node"))
         .agg(sum(col("s")).as("raw"))
       val norm = flowed.agg(sum(col("raw")).as("_z"))
-      cut(
+      Lineage.cut(
         nodes.join(flowed, Seq("node"), "left")
           .crossJoin(broadcast(norm))
           .select(col("node"),
@@ -99,7 +85,7 @@ object Hits {
             coalesce(
               when(col("_z") > 0, coalesce(col("raw"), lit(0.0)) / col("_z")),
               lit(0.0)).as("s")),
-        round, toSide)
+        round)
     }
 
     var auth = nodes.select(col("node"), lit(1.0).as("s"))

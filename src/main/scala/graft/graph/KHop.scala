@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Bounded-depth BFS over a directed edge list: the minimum hop count
@@ -41,19 +42,18 @@ object KHop {
     val e = edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
 
-    var visited = seeds.select(col("node")).filter(col("node").isNotNull)
-      .distinct().withColumn("hops", lit(0)).localCheckpoint(false)
+    var visited = Lineage.cut(seeds.select(col("node")).filter(col("node").isNotNull)
+      .distinct().withColumn("hops", lit(0)))
     var frontier = visited.select("node")
     var hop = 1
     var exhausted = frontier.isEmpty
     while (hop <= k && !exhausted) {
-      val next = frontier.join(e, frontier("node") === e("src"))
+      val next = Lineage.cut(frontier.join(e, frontier("node") === e("src"))
         .select(e("dst").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
-        .withColumn("hops", lit(hop))
-        .localCheckpoint(false)
+        .withColumn("hops", lit(hop)), hop)
       exhausted = next.isEmpty
-      visited = visited.unionByName(next).localCheckpoint(false)
+      visited = Lineage.cut(visited.unionByName(next), hop)
       frontier = next.select("node")
       hop += 1
     }

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Community detection over the materialized entity graph — SYNCHRONOUS
@@ -48,25 +49,23 @@ object LabelPropagation {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-    val nbr = und.select(col("a").as("v"), col("b").as("u"))
-      .unionAll(und.select(col("b").as("v"), col("a").as("u")))
-      .localCheckpoint(false)
+    val nbr = Lineage.cut(und.select(col("a").as("v"), col("b").as("u"))
+      .unionAll(und.select(col("b").as("v"), col("a").as("u"))))
     var labels = nbr.select(col("v").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    for (_ <- 1 to rounds) {
+    for (r <- 1 to rounds) {
       // plurality winner as an arg-min PARTIAL aggregate: lexicographic
       // min(struct(-count, label)) == ORDER BY c DESC, label ASC LIMIT 1
       // (the ConflictResolution/EntityTyping posture) — map-side combine
       // collapses each node to one row before the exchange and the
       // per-round Sort + Window the row_number formulation paid is gone
-      labels = nbr
+      labels = Lineage.cut(nbr
         .join(labels.withColumnRenamed("node", "u"), Seq("u"))
         .groupBy(col("v"), col("label"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("v"))
         .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("_b"))
-        .select(col("v").as("node"), col("_b.l").as("label"))
-        .localCheckpoint(false)
+        .select(col("v").as("node"), col("_b.l").as("label")), r)
     }
     labels.select(col("node"), col("label").as("community"))
   }

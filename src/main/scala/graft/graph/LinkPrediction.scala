@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Neighborhood-based link prediction over the materialized entity graph —
@@ -48,12 +49,11 @@ object LinkPrediction {
     // lineage cuts: und feeds the dictionary + encode joins; undE feeds
     // the degree agg, the adjacency AND the anti-join; w feeds the
     // self-join twice (the Triangles posture)
-    val und = edges
+    val und = Lineage.cut(edges
       .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct())
     // Dense LEXICOGRAPHIC entity ids (the kg34 width trick, applied inside
     // the operator per guide §2.3): the witness self-join's deg²-sized pair
     // stream and its (a, b) partial agg then carry 8-byte longs instead of
@@ -62,15 +62,13 @@ object LinkPrediction {
     // (score desc, a, b) tie-break are all EXACTLY the string semantics;
     // only the final k rows are decoded back (and re-sorted — the decode
     // joins do not preserve the TakeOrdered order).
-    val dict = Dictionary.build(
+    val dict = Lineage.cut(Dictionary.build(
       und.select(col("a").as("value")).unionAll(und.select(col("b").as("value"))),
-      "value")
-      .localCheckpoint(false) // 2 encode + 2 decode consumers
-    val undE = und
+      "value")) // 2 encode + 2 decode consumers
+    val undE = Lineage.cut(und
       .join(dict.select(col("value").as("a"), col("id").as("_ia")), "a")
       .join(dict.select(col("value").as("b"), col("id").as("_ib")), "b")
-      .select(col("_ia").as("a"), col("_ib").as("b"))
-      .localCheckpoint(false)
+      .select(col("_ia").as("a"), col("_ib").as("b")))
     val deg = undE.select(col("a").as("node"))
       .unionAll(undE.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("degree"))
@@ -82,10 +80,9 @@ object LinkPrediction {
     // a degree-1 node can never witness a pair (it has one neighbor), and
     // ln 1 = 0 would trap the weight projection under ANSI — drop before
     // the weights, which also shrinks the self-join input
-    val w = kept.filter(col("degree") >= 2).select(col("z"), col("n"),
+    val w = Lineage.cut(kept.filter(col("degree") >= 2).select(col("z"), col("n"),
       round(lit(1e6) / log(col("degree"))).cast("long").as("aa_u"),
-      round(lit(1e6) / col("degree")).cast("long").as("ra_u"))
-      .localCheckpoint(false)
+      round(lit(1e6) / col("degree")).cast("long").as("ra_u")))
     val w1 = w.select(col("z"), col("n").as("a"), col("aa_u"), col("ra_u"))
     val w2 = w.select(col("z"), col("n").as("b"))
     // salted witness self-join (row-identical to w1 ⋈ w2 on z): a hub

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Newman–Girvan modularity of a community assignment (Newman & Girvan,
@@ -40,12 +41,11 @@ object Modularity {
    *         modularity) with modularity = round(e/m − (d/(2m))², 6).
    */
   def perCommunity(edges: DataFrame, communities: DataFrame): DataFrame = {
-    val und = edges
+    val und = Lineage.cut(edges
       .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .localCheckpoint(false) // feeds m, the annotation join, and degrees
+      .distinct()) // feeds m, the annotation join, and degrees
     val m = und.agg(count(lit(1)).as("_m"))
     val ca = communities.select(col("node").as("a"), col("community").as("_ca"))
     val cb = communities.select(col("node").as("b"), col("community").as("_cb"))

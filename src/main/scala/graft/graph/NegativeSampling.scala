@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Deterministic FILTERED negative sampling over a canonical triple set —
@@ -54,9 +55,8 @@ object NegativeSampling {
     // consumed four times (domain, domain sizes, candidates, the
     // false-negative anti-join): materialize once, cut the upstream
     // lineage — the [[Cooccurrence.pmi]] posture
-    val t = triples.select(col("subj"), col("pred"), col("obj"))
-      .filter(col("subj").isNotNull && col("pred").isNotNull && col("obj").isNotNull)
-      .localCheckpoint(false)
+    val t = Lineage.cut(triples.select(col("subj"), col("pred"), col("obj"))
+      .filter(col("subj").isNotNull && col("pred").isNotNull && col("obj").isNotNull))
 
     // per-predicate object domain, ranked 0..n_p-1 by value (deterministic);
     // bounded by distinct (pred, obj), so the window is cheap by construction

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * PageRank over the materialized entity graph — entity-importance scoring
@@ -42,21 +43,14 @@ import org.apache.spark.sql.functions._
  *    [[graft.link.ConnectedComponents]], which needs a per-round action
  *    only because it checks CONVERGENCE; a fixed-iteration power method
  *    does not);
- *  - lineage is cut every round (lazy localCheckpoint — the plan each
- *    round references the previous round's checkpoint boundary, so the
- *    composed job's plan stays O(1) per iteration; pass [[Reliable]] on
- *    a real cluster to write through durable parquet every `every`
- *    rounds — executor loss then costs at most `every` rounds, not the
- *    job; identical contract to ConnectedComponents.Reliable).
+ *  - lineage is cut every round (lazy — the plan each round references
+ *    the previous round's cut, so the composed job's plan stays O(1) per
+ *    iteration); the cut policy, durable posture included, is
+ *    [[graft.operators.Lineage]].
  * Nothing node- or edge-sized ever reaches the driver; the only driver
  * action inside `run` is the node COUNT (the N in the teleport term).
  */
 object PageRank {
-
-  /** Durable-checkpoint config for cluster runs: write ranks to `dir`
-    * every `every` iterations (localCheckpoint blocks die with their
-    * executor; see ConnectedComponents for the full rationale). */
-  final case class Reliable(dir: String, every: Int = 5)
 
   /**
    * @param edges    two columns `src`, `dst` (any orderable type);
@@ -67,31 +61,21 @@ object PageRank {
    *         rounded to 6 dp at the END only (intermediate math is full
    *         double precision).
    */
-  def run(edges: DataFrame, iterations: Int = 10, damping: Double = 0.85,
-          reliable: Option[Reliable] = None): DataFrame = {
+  def run(edges: DataFrame, iterations: Int = 10, damping: Double = 0.85): DataFrame = {
     require(iterations >= 0, s"iterations $iterations")
     require(damping >= 0 && damping <= 1, s"damping $damping")
 
     val e = edges.select(col("src"), col("dst")).distinct()
-    val nodes = e.select(col("src").as("node"))
+    val nodes = Lineage.cut(e.select(col("src").as("node"))
       .union(e.select(col("dst")))
-      .distinct()
-      .localCheckpoint(true) // count() below is its materializing action
+      .distinct(), eager = true) // count() below is its materializing action
     val n = nodes.count().toDouble
     if (n == 0) return nodes.select(col("node"), lit(0.0).as("rank"))
 
     // out-degree-annotated edges, reused every round: (src, dst, deg)
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val eDeg = e.join(outDeg, "src").localCheckpoint(false)
-    val srcs = outDeg.select(col("src")).localCheckpoint(false)
-
-    def cut(df: DataFrame, round: Int): DataFrame = reliable match {
-      case Some(r) if round % r.every == 0 =>
-        val p = s"${r.dir}/pr_iter_$round"
-        df.write.mode("overwrite").parquet(p)
-        df.sparkSession.read.parquet(p)
-      case _ => df.localCheckpoint(false)
-    }
+    val eDeg = Lineage.cut(e.join(outDeg, "src"))
+    val srcs = Lineage.cut(outDeg.select(col("src")))
 
     var ranks = nodes.select(col("node"), lit(1.0 / n).as("r"))
     var iter = 0
@@ -103,7 +87,7 @@ object PageRank {
       val contribs = eDeg.join(ranks, eDeg("src") === ranks("node"))
         .groupBy(col("dst").as("node"))
         .agg(sum(col("r") / col("deg")).as("c"))
-      ranks = cut(
+      ranks = Lineage.cut(
         nodes.join(contribs, Seq("node"), "left")
           .crossJoin(broadcast(dangling))
           .select(col("node"),

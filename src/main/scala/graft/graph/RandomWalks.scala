@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Deterministic DeepWalk-style random-walk corpus over the constructed
@@ -55,18 +56,14 @@ object RandomWalks {
       .agg(count(lit(1)).as("n_pairs"))
   }
 
-  /** @param cutLineage checkpoint each step (production posture); false
-    *                    keeps the raw per-step plan visible for plan
-    *                    audits/tests — output identical. */
   def walks(edges: DataFrame, startFraction: Double, walksPerNode: Int,
-            length: Int, salt: String = "graft",
-            cutLineage: Boolean = true): DataFrame = {
+            length: Int, salt: String = "graft"): DataFrame = {
     require(walksPerNode > 0 && length > 0, "need positive walk shape")
     val e = edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull
         && col("src") =!= col("dst"))
-    val und = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(false)
+    val und = Lineage.cut(
+      e.unionByName(e.select(col("dst").as("src"), col("src").as("dst"))).distinct())
     val nodes = und.select(col("src").as("node")).distinct()
     val starts = graft.textops.Sampling.hashSample(nodes, "node", startFraction, salt)
       .select(col("node").as("start"),
@@ -75,20 +72,26 @@ object RandomWalks {
     var out = cur.withColumn("step", lit(0))
       .select(col("start"), col("walk_idx"), col("step"), col("node"))
     (1 to length).foreach { step =>
-      val key = md5(concat_ws("|", lit(salt), col("start"), col("walk_idx"),
-        lit(step), col("src"), col("dst")))
       // lineage cut per step (the KHop posture): `cur` feeds BOTH the next
       // step's join and its own output branch — without it the L output
       // branches re-evaluate the whole prior join chain, O(L²) work at
       // DeepWalk's typical L=40..80
-      val stepped = cur.join(und, cur("node") === und("src"))
-        .groupBy(col("start"), col("walk_idx"))
-        .agg(min(struct(key.as("k"), col("dst").as("d"))).as("_c"))
-        .select(col("start"), col("walk_idx"), col("_c.d").as("node"))
-      cur = if (cutLineage) stepped.localCheckpoint(false) else stepped
+      cur = Lineage.cut(stepFrame(cur, und, salt, step), step)
       out = out.unionByName(cur.withColumn("step", lit(step))
         .select(col("start"), col("walk_idx"), col("step"), col("node")))
     }
     out
+  }
+
+  /** One walk step: each (start, walk_idx) at `cur.node` moves to the
+    * md5-arg-min neighbor in `und`. Returns (start, walk_idx, node). */
+  private[graft] def stepFrame(cur: DataFrame, und: DataFrame, salt: String,
+                               step: Int): DataFrame = {
+    val key = md5(concat_ws("|", lit(salt), col("start"), col("walk_idx"),
+      lit(step), col("src"), col("dst")))
+    cur.join(und, cur("node") === und("src"))
+      .groupBy(col("start"), col("walk_idx"))
+      .agg(min(struct(key.as("k"), col("dst").as("d"))).as("_c"))
+      .select(col("start"), col("walk_idx"), col("_c.d").as("node"))
   }
 }

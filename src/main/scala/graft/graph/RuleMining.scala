@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Schema-quality rule mining over a canonical triple set — the AMIE-lite
@@ -90,14 +91,14 @@ object RuleMining {
    *         for rules with support >= minSupport.
    */
   def compositionRules(triples: DataFrame, minSupport: Long = 1L): DataFrame = {
-    val t = triples.select(col("subj"), col("pred"), col("obj"))
+    val t = Lineage.cut(triples.select(col("subj"), col("pred"), col("obj"))
       .filter(col("subj").isNotNull && col("pred").isNotNull && col("obj").isNotNull)
-      .distinct().localCheckpoint(false)
-    val paths = t.alias("l")
+      .distinct())
+    val paths = Lineage.cut(t.alias("l")
       .join(t.alias("r"), col("l.obj") === col("r.subj"))
       .select(col("l.pred").as("body_p"), col("r.pred").as("body_q"),
         col("l.subj").as("x"), col("r.obj").as("y"))
-      .distinct().localCheckpoint(false)
+      .distinct())
     val nPaths = paths.groupBy("body_p", "body_q")
       .agg(count(lit(1)).as("n_paths"))
     val sup = paths
@@ -132,9 +133,9 @@ object RuleMining {
    * key), then a #pred²-bounded agg and a broadcast-sized totals join.
    */
   def implicationRules(triples: DataFrame, minSupport: Long = 1L): DataFrame = {
-    val t = triples.select(col("subj"), col("pred"), col("obj"))
+    val t = Lineage.cut(triples.select(col("subj"), col("pred"), col("obj"))
       .filter(col("subj").isNotNull && col("pred").isNotNull && col("obj").isNotNull)
-      .distinct().localCheckpoint(false)
+      .distinct())
     val sup = t.alias("l")
       .join(t.alias("r"),
         col("l.subj") === col("r.subj") && col("l.obj") === col("r.obj")
@@ -193,12 +194,11 @@ object RuleMining {
                                        minSupport: Long = 1L): DataFrame = {
     val cols = membership.columns
     require(cols.length == 2, s"membership needs (entity, group), got ${cols.toSeq}")
-    val t = triples.select(col("subj"), col("pred"), col("obj"))
+    val t = Lineage.cut(triples.select(col("subj"), col("pred"), col("obj"))
       .filter(col("subj").isNotNull && col("pred").isNotNull && col("obj").isNotNull)
-      .distinct().localCheckpoint(false)
-    val mem = membership.select(col(cols(0)).as("_e"), col(cols(1)).as("_g"))
-      .filter(col("_e").isNotNull && col("_g").isNotNull).distinct()
-      .localCheckpoint(false)
+      .distinct())
+    val mem = Lineage.cut(membership.select(col(cols(0)).as("_e"), col(cols(1)).as("_g"))
+      .filter(col("_e").isNotNull && col("_g").isNotNull).distinct())
 
     // base ⇒ base (the body never reaches this join: equal predicates)
     val supBase = t.alias("l")
@@ -214,13 +214,12 @@ object RuleMining {
 
     // shared support of p ⇒ body and body ⇒ p: distinct base triples
     // whose endpoints share a group — linear annotate + semi-exists
-    val colSup = t.filter(col("subj") =!= col("obj"))
+    val colSup = Lineage.cut(t.filter(col("subj") =!= col("obj"))
       .join(mem.select(col("_e").as("subj"), col("_g")), Seq("subj"))
       .join(mem.select(col("_e").as("obj"), col("_g")), Seq("obj", "_g"), "left_semi")
       .select(col("subj"), col("pred"), col("obj")).distinct()
       .groupBy(col("pred")).agg(count(lit(1)).as("support"))
-      .filter(col("support") >= minSupport)
-      .localCheckpoint(false) // feeds both direction row sets
+      .filter(col("support") >= minSupport)) // feeds both direction row sets
     val toBody = colSup
       .select(col("pred").as("body_pred"), lit(bodyPred).as("head_pred"),
         col("support"))
@@ -265,9 +264,9 @@ object RuleMining {
     // once and cut the upstream lineage — same posture as
     // [[Cooccurrence.pmi]]; without it each reuse replays the full
     // upstream pipeline (measured 7.4 s -> the join itself at bench scale)
-    val t = triples.select(col("subj"), col("pred"), col("obj"))
+    val t = Lineage.cut(triples.select(col("subj"), col("pred"), col("obj"))
       .filter(col("subj").isNotNull && col("pred").isNotNull && col("obj").isNotNull)
-      .distinct().localCheckpoint(false)
+      .distinct())
     val sup = t.alias("l")
       .join(t.alias("r"),
         col("l.subj") === col("r.obj") && col("l.obj") === col("r.subj"))

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Temporal validity intervals — coalesce per-triple observation days into
@@ -66,7 +67,7 @@ object TemporalValidity {
     // lineage cut: iv feeds BOTH self-join sides — the two sides project
     // identical columns, but without the cut each side replays the whole
     // observation→window→interval chain (kg33 measured 8 upstream scans)
-    val iv = ivIn.localCheckpoint(false)
+    val iv = Lineage.cut(ivIn)
     val a = iv.as("a")
     val b = iv.as("b")
     val keyEq = keyCols.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
@@ -105,7 +106,7 @@ object TemporalValidity {
         // branch) and the agg subtree differs from the main one, so
         // exchange reuse never fires — without the cut the whole interval
         // chain evaluates twice (kg37 measured 2x the kg32 chain)
-        val iv = ivIn.localCheckpoint(false)
+        val iv = Lineage.cut(ivIn)
         iv.crossJoin(broadcast(iv.agg(max(col("to_day")).as("as_of_day"))))
     }
     withDay.filter(col("from_day") <= col("as_of_day")

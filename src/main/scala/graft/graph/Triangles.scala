@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Per-node triangle counting + local clustering coefficient over the
@@ -42,12 +43,11 @@ object Triangles {
     // closing join — without a lineage cut every reference recomputes
     // the whole upstream plan (measured 16.6 s -> the full KG pipeline
     // ~6x on the kg10 bench query; cut, the recompute disappears)
-    val und = edges
+    val und = Lineage.cut(edges
       .filter(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct())
     val deg = und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("degree"))
@@ -58,11 +58,10 @@ object Triangles {
     // oriented: u = lower (degree, id) endpoint, dv = degree of the head
     // (carried so the wedge join can rank its two ends without another
     // degree lookup)
-    val o = und.join(dA, "a").join(dB, "b")
+    val o = Lineage.cut(und.join(dA, "a").join(dB, "b")
       .select(when(aFirst, col("a")).otherwise(col("b")).as("u"),
         when(aFirst, col("b")).otherwise(col("a")).as("v"),
-        when(aFirst, col("db")).otherwise(col("da")).as("dv"))
-      .localCheckpoint(false)
+        when(aFirst, col("db")).otherwise(col("da")).as("dv")))
     val o1 = o.select(col("u"), col("v").as("x"), col("dv").as("dx"))
     val o2 = o.select(col("u"), col("v").as("y"), col("dv").as("dy"))
     val wedges = o1.join(o2, Seq("u"))

@@ -23,11 +23,10 @@ object Canonicalize {
    * @return entity table (mention_id, canonical_id, mention_type, norm,
    *         canonical_form, canonical_uri, n_occurrences)
    */
-  def entities(mentions: DataFrame, pairs: DataFrame,
-               ccReliable: Option[ConnectedComponents.Reliable] = None): DataFrame = {
+  def entities(mentions: DataFrame, pairs: DataFrame): DataFrame = {
     val withCc = ConnectedComponents.components(
       mentions, "mention_id",
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst")), ccReliable)
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
       .withColumnRenamed("component", "canonical_id")
 
     // canonical surface form = the most frequent raw form in the cluster

@@ -1,7 +1,8 @@
 package graft.link
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Connected components over an edge list as **iterative DataFrame
@@ -15,60 +16,31 @@ import org.apache.spark.sql.functions._
  * Scale properties:
  *  - each round is `groupBy(min)` + an equi-join — both partial-agg /
  *    AQE-skew friendly; no `collect_list`, so a hot vertex cannot OOM a task;
- *  - `localCheckpoint` every round cuts the lineage chain (iterative plans
- *    otherwise grow exponentially in Catalyst);
+ *  - lineage is cut every round ([[graft.operators.Lineage]], which also
+ *    owns the durable posture for cluster runs);
  *  - rounds converge in O(log^2 n); alias-cluster graphs (tiny star-shaped
  *    components) converge in 2-3 rounds.
- *
- * Fault tolerance: `localCheckpoint` blocks live on EXECUTORS — on a real
- * cluster an executor loss mid-fixpoint makes the edge RDD unrecoverable
- * (Spark cannot recompute a localCheckpoint'd lineage) and fails the job.
- * Fine at local[N]; for cluster runs pass a [[Reliable]] config: every
- * `every` rounds the edge set is written through durable Parquet and read
- * back, so a lost executor costs at most `every` rounds of recompute from
- * durable storage instead of the whole job. Off by default — the local
- * single-JVM benchmark path is unchanged.
  */
 object ConnectedComponents {
 
-  /** Durable-checkpoint config for the fixpoint loop: write the edge set to
-    * `dir` every `every` rounds (round 0 included — the input edge set). */
-  final case class Reliable(dir: String, every: Int = 5)
-
   /**
    * @param edges DataFrame with two long columns `src`, `dst` (undirected).
-   * @param reliable durable-checkpoint config for cluster runs (see above).
    * @return DataFrame (id: long, component: long) where component is the
    *         minimum vertex id of the component. NOTE: vertices whose only
    *         incident edges are self-loops are dropped (self-loops are
    *         filtered before the fixpoint); use [[components]] to attach
    *         singleton components to a vertex table via coalesce.
    */
-  def run(edges: DataFrame, maxIter: Int = 25,
-          reliable: Option[Reliable] = None): DataFrame = {
+  def run(edges: DataFrame, maxIter: Int = 25): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    // cut lineage each round: durable parquet on reliable-checkpoint rounds,
-    // localCheckpoint(eager=false) otherwise — the lazy local form
-    // materializes under the checksum action below, ONE job per round
-    // (materialize + converge check together) instead of two, which matters
-    // because round jobs on a shrinking edge set are scheduling-latency-
-    // bound, not compute-bound.
-    def cut(df: DataFrame, round: Int): DataFrame = reliable match {
-      case Some(r) if round % r.every == 0 =>
-        val p = s"${r.dir}/cc_round_$round"
-        df.write.mode("overwrite").parquet(p)
-        df.sparkSession.read.parquet(p)
-      case _ => df.localCheckpoint(false)
-    }
-
     // canonical undirected form: (u > v), self-loops dropped
-    var e = cut(edges.select(
+    var e = Lineage.cut(edges.select(
         greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v"))
       .filter($"u" =!= $"v")
-      .distinct(), 0)
+      .distinct())
 
     var converged = false
     var iter = 0
@@ -96,11 +68,12 @@ object ConnectedComponents {
         .filter($"a" =!= $"b")
         .select(greatest($"a", $"b").as("u"), least($"a", $"b").as("v"))
         .distinct()
-      val ssCut = cut(ss, iter + 1)
+      val ssCut = Lineage.cut(ss, iter + 1)
 
       // convergence: edge multiset fixpoint via order-insensitive checksum.
-      // This single action also materializes the lazy checkpoint above —
-      // one job per round total.
+      // This single action also materializes the lazy cut above — one job
+      // per round total, which matters because round jobs on a shrinking
+      // edge set are scheduling-latency-bound, not compute-bound.
       val newSig = checksum(ssCut)
       converged = prevSig == newSig
       prevSig = newSig
@@ -133,9 +106,8 @@ object ConnectedComponents {
 
   /** Attach component ids to a vertex table: vertices absent from the edge
     * list become their own singleton component. */
-  def components(vertices: DataFrame, idCol: String, edges: DataFrame,
-                 reliable: Option[Reliable] = None): DataFrame = {
-    val cc = run(edges, reliable = reliable)
+  def components(vertices: DataFrame, idCol: String, edges: DataFrame): DataFrame = {
+    val cc = run(edges)
     vertices.join(cc.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("component", coalesce(col("component"), col(idCol)))
   }

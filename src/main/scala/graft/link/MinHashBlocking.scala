@@ -2,6 +2,7 @@ package graft.link
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * MinHash-LSH candidate blocking for entity linking.
@@ -189,8 +190,7 @@ object MinHashBlocking {
     // sides) AND both self-join sides — four consumers; without the cut
     // the shingle-hash + minhash-signature projection replays once per
     // consumer (measured 4 full upstream chains in the dd2 plan)
-    val withBands = bandedIndex(df, idCol, shinglesCol, threshold, k, extraKey)
-      .localCheckpoint(false)
+    val withBands = Lineage.cut(bandedIndex(df, idCol, shinglesCol, threshold, k, extraKey))
 
     // drop pathological buckets entirely ([[capBuckets]] — a band bucket
     // with >maxBucket members is a degenerate stop-shingle cluster; its

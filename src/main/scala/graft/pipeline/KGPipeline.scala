@@ -43,28 +43,16 @@ object KGPipeline {
         * more than recomputing its (codegen) extraction DAG twice — so this
         * is off by default and only worth it when MANY consumers follow
         * (e.g. the driver-contract kg4/kg5/kg6/kg7 query family). */
-      cacheLarge: Boolean = false,
-      /** Durable-checkpoint cadence for the connected-components fixpoint
-        * (requires `checkpointDir`): every N rounds the edge set is staged
-        * through Parquet so an executor loss on a real cluster costs at most
-        * N rounds, not the job ([[graft.link.ConnectedComponents.Reliable]]).
-        * 0 = off (localCheckpoint only — the single-JVM fast path). */
-      ccReliableEvery: Int = 0,
-      /** Where the CC fixpoint's durable round checkpoints go; defaults to
-        * `checkpointDir` — set separately to turn on durable CC WITHOUT
-        * full-stage checkpointing (isolates the durability overhead). */
-      ccRoundsDir: Option[String] = None)
+      cacheLarge: Boolean = false)
 
   object Config {
     /** Build a Config from `spark.graft.*` session confs — the
       * spark-submit deployment surface for every pipeline knob, e.g.
       *
-      *   spark-submit --conf spark.graft.checkpointDir=s3a://bucket/state \
-      *                --conf spark.graft.ccReliableEvery=3 ...
+      *   spark-submit --conf spark.graft.checkpointDir=s3a://bucket/state ...
       *
-      * Unset keys keep the code defaults. This is how a cluster operator
-      * turns on durable-CC checkpointing ([[Config.ccReliableEvery]])
-      * without a code change. */
+      * Unset keys keep the code defaults. The same `checkpointDir` conf
+      * also makes lineage cuts durable ([[graft.operators.Lineage]]). */
     def fromSession(spark: SparkSession): Config = {
       def opt(k: String): Option[String] = spark.conf.getOption(s"spark.graft.$k")
       Config(
@@ -74,9 +62,7 @@ object KGPipeline {
         maxBucket = opt("maxBucket").map(_.toInt).getOrElse(10000),
         repartitionInput = opt("repartitionInput").map(_.toInt),
         cacheIntermediate = opt("cacheIntermediate").forall(_.toBoolean),
-        cacheLarge = opt("cacheLarge").exists(_.toBoolean),
-        ccReliableEvery = opt("ccReliableEvery").map(_.toInt).getOrElse(0),
-        ccRoundsDir = opt("ccRoundsDir"))
+        cacheLarge = opt("cacheLarge").exists(_.toBoolean))
     }
   }
 
@@ -139,13 +125,7 @@ object KGPipeline {
     }
 
     val entities = shared(stage("entities") {
-      val ccReliable =
-        if (cfg.ccReliableEvery > 0)
-          cfg.ccRoundsDir.orElse(cfg.checkpointDir)
-            .map(d => graft.link.ConnectedComponents.Reliable(
-              s"$d/cc_rounds", cfg.ccReliableEvery))
-        else None
-      Canonicalize.entities(mentions.drop("shingles"), pairs, ccReliable)
+      Canonicalize.entities(mentions.drop("shingles"), pairs)
     })
 
     val canonicalTriples = sharedLarge(stage("canonical_triples") {

@@ -2,6 +2,7 @@ package graft.schemadisc
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * SHACL-style shape SYNTHESIS from the typed triple profile — the
@@ -31,12 +32,12 @@ object ShapeSynthesis {
   def shapes(typedTriples: DataFrame): DataFrame = {
     // consumed by three aggregates: cut lineage once (the RuleMining
     // posture) so upstream extraction doesn't replay per consumer
-    val td = typedTriples
+    val td = Lineage.cut(typedTriples
       .select(col("subj"), col("pred"), col("obj"),
         col("subj_type"), col("obj_type"))
       .filter(col("subj").isNotNull && col("pred").isNotNull
         && col("obj").isNotNull && col("subj_type").isNotNull)
-      .distinct().localCheckpoint(false)
+      .distinct())
     val perSubj = td.groupBy(col("subj_type"), col("pred"), col("subj"))
       .agg(count(lit(1)).as("n_objs"))
     val pp = perSubj.groupBy(col("subj_type").as("label"), col("pred").as("predicate"))

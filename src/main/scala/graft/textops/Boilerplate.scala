@@ -2,6 +2,7 @@ package graft.textops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Corpus-level boilerplate removal: drop SEGMENTS (lines, sentences, or
@@ -51,11 +52,10 @@ object Boilerplate {
     // lineage cut: segs feeds the document-frequency rollup AND the
     // reassembly aggregation — without it the segmentation explode
     // evaluates twice (cl1 measured 2 upstream scans per consumer)
-    val segs = docs.select(
+    val segs = Lineage.cut(docs.select(
       col(idCol),
       posexplode(split(col(textCol), java.util.regex.Pattern.quote(delimiter)))
-        .as(Seq("pos", "seg")))
-      .localCheckpoint(false)
+        .as(Seq("pos", "seg"))))
 
     // document frequency per segment: dedup (seg, doc) first so the final
     // count is a plain count (two partial-agg stages, no count(distinct)

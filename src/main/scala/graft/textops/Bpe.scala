@@ -2,6 +2,7 @@ package graft.textops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Byte-pair-encoding tokenizer TRAINING and application (Sennrich et al.
@@ -72,8 +73,8 @@ object Bpe {
    * construction, like the IVF centroid table). Stops early when every
    * word has collapsed to a single symbol.
    *
-   * Each iteration materializes the ≤ vocabCap-row symbol table
-   * (localCheckpoint — the bounded-lineage pattern of
+   * Each iteration materializes the ≤ vocabCap-row symbol table (an eager
+   * [[graft.operators.Lineage]] cut — the bounded-lineage pattern of
    * [[graft.link.ConnectedComponents]]), so iteration t never replays
    * merges 0..t-1 and the plan stays flat across hundreds of merges.
    */
@@ -81,9 +82,8 @@ object Bpe {
                   vocabCap: Int = 50000): Seq[(Int, String, String)] = {
     require(numMerges >= 1, s"numMerges $numMerges")
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String)]
-    var syms = wordCounts(docs, textCol, vocabCap)
-      .select(col("n"), symbolize(col("word")).as("syms"))
-      .localCheckpoint()
+    var syms = Lineage.cut(wordCounts(docs, textCol, vocabCap)
+      .select(col("n"), symbolize(col("word")).as("syms")), eager = true)
     var t = 0
     var done = false
     while (t < numMerges && !done) {
@@ -97,8 +97,9 @@ object Bpe {
       else {
         val (l, r) = (top(0).getString(0), top(0).getString(1))
         merges += ((t, l, r))
-        val next = syms.withColumn("syms", applyMerge(col("syms"), l, r))
-          .localCheckpoint()
+        // eager: the unpersist below must not drop the blocks this cut reads
+        val next = Lineage.cut(
+          syms.withColumn("syms", applyMerge(col("syms"), l, r)), t + 1, eager = true)
         syms.unpersist()
         syms = next
         t += 1
@@ -116,7 +117,7 @@ object Bpe {
 
   /** Segment each DISTINCT word of `words(wordCol)` under the trained
     * merges (applied in rank order): adds `bpe` (array<string>). Folds one
-    * merge per pass with periodic localCheckpoint so the plan depth stays
+    * merge per pass with periodic lineage cuts so the plan depth stays
     * bounded for large merge lists. */
   def segmentWords(words: DataFrame, wordCol: String,
                    merges: Seq[(Int, String, String)],
@@ -125,7 +126,7 @@ object Bpe {
     merges.sortBy(_._1).zipWithIndex.foreach { case ((_, l, r), i) =>
       df = df.withColumn("bpe", applyMerge(col("bpe"), l, r))
       if ((i + 1) % checkpointEvery == 0 && i + 1 < merges.size)
-        df = df.localCheckpoint()
+        df = Lineage.cut(df, (i + 1) / checkpointEvery, eager = true)
     }
     df
   }

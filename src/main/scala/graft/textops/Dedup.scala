@@ -2,6 +2,7 @@ package graft.textops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 import graft.link.{ConnectedComponents, MinHashBlocking}
 
 /**
@@ -166,14 +167,13 @@ object Dedup {
     // lineage cut: the shingled table feeds both self-join sides (and the
     // cap machinery when enabled) — without it the wordShingles + hash
     // projection evaluates once per side (dd4 measured 2 upstream chains)
-    val withSh0 = df.select(col(blockCol).as("_blk"), col(idCol),
+    val withSh0 = Lineage.cut(df.select(col(blockCol).as("_blk"), col(idCol),
       org.apache.spark.sql.graftfns.TextExpressions
         .word_shingle_hashes(col(textCol), n).as("_sh"))
       // repartition on the block key before the cut (the dd10 posture):
       // a single-split corpus otherwise runs the within-block join in one
       // task; the exchange spreads it scale-adaptively
-      .repartition(col("_blk"))
-      .localCheckpoint(false)
+      .repartition(col("_blk")))
     val withSh =
       if (maxBlock == Int.MaxValue && pairBudget == Long.MaxValue) withSh0
       else MinHashBlocking.capBuckets(withSh0, Seq("_blk"), maxBlock, pairBudget)
@@ -258,7 +258,7 @@ object Dedup {
 
   /** Per-doc distinct hashed shingles sorted RAREST-FIRST by the global
     * (document frequency, token) order — the shared index of the exact
-    * set-similarity joins: (id, _toks, _n). localCheckpoint: reused by
+    * set-similarity joins: (id, _toks, _n). Lineage cut: reused by
     * the prefix explode and the verify joins of every caller. */
   private def rareFirstSorted(df: DataFrame, idCol: String, textCol: String,
                               n: Int): DataFrame = {
@@ -268,12 +268,11 @@ object Dedup {
       .filter(size(col("_sh")) > 0)
     val toks = sh.select(col("id"), explode(col("_sh")).as("_t"))
     val dfs = toks.groupBy("_t").agg(count(lit(1)).as("_df"))
-    toks.join(dfs, Seq("_t"))
+    Lineage.cut(toks.join(dfs, Seq("_t"))
       .groupBy("id")
       .agg(sort_array(collect_list(struct(col("_df"), col("_t")))).as("_st"))
       .select(col("id"), transform(col("_st"), s => s.getField("_t")).as("_toks"),
-        size(col("_st")).as("_n"))
-      .localCheckpoint(false)
+        size(col("_st")).as("_n")))
   }
 
   /**
@@ -357,7 +356,7 @@ object Dedup {
     // and both the exact and multiprobe join sides — without it the
     // hyperplane signatures recompute once per consumer (dd5 measured 4
     // upstream chains / 16 corpus scans in the static plan)
-    val indexed0 = df.select(col(idCol).as("_id"), col(vecCol).as("_v"),
+    val indexed0 = Lineage.cut(df.select(col(idCol).as("_id"), col(vecCol).as("_v"),
       explode(array((0 until tables).map(t =>
         struct(lit(t).as("t"),
           graft.ann.Similarity.hyperplaneSignature(col(vecCol), m, t).as("sig"))): _*)).as("_b"))
@@ -365,8 +364,7 @@ object Dedup {
       // repartition on the bucket key before the cut: the index inherits
       // the input's split count (a single-file corpus ran the bucket join
       // in one task); the exchange spreads it scale-adaptively
-      .repartition(col("_t"), col("_s0"))
-      .localCheckpoint(false)
+      .repartition(col("_t"), col("_s0")))
     val indexed = MinHashBlocking.capBuckets(indexed0, Seq("_t", "_s0"), maxBucket, pairBudget)
     val a = indexed.select(col("_t"), col("_s0").as("_sig"),
       col("_id").as("id_a"), col("_v").as("_v_a"))
@@ -424,11 +422,10 @@ object Dedup {
     // lineage cut: the capped union feeds the probe AND existing sides —
     // without it the state/increment banding chains replay per consumer
     // (dd8 measured 120 upstream scans in the static plan)
-    val build = MinHashBlocking.capBuckets(
+    val build = Lineage.cut(MinHashBlocking.capBuckets(
       stateIndex.withColumn("_new", lit(false))
         .unionByName(incIdx.withColumn("_new", lit(true))),
-      Seq("_band"), maxBucket, pairBudget)
-      .localCheckpoint(false)
+      Seq("_band"), maxBucket, pairBudget))
     val probe = build.filter(col("_new"))
       .select(col("_band"), col("_id").as("id_new"), col("_sh").as("_sh_n"),
         size(col("_sh")).as("_n_n"))

@@ -2,6 +2,7 @@ package graft.textops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 import graft.link.MinHashBlocking
 
 /**
@@ -81,7 +82,7 @@ object EditDistance {
     // in ONE task (dd10 measured wall ≈ total task time). The exchange
     // spreads it across spark.sql.shuffle.partitions (scale-adaptive) and
     // the cut stops the neighborhood explode replaying per join side.
-    val keyed1 = keyed0.repartition(col("_key")).localCheckpoint(false)
+    val keyed1 = Lineage.cut(keyed0.repartition(col("_key")))
     val keyed =
       if (maxBlock == Int.MaxValue && pairBudget == Long.MaxValue) keyed1
       else MinHashBlocking.capBuckets(keyed1, Seq("_key"), maxBlock, pairBudget)

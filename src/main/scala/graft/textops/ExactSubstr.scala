@@ -3,6 +3,7 @@ package graft.textops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Exact-substring duplicate detection and removal — the "ExactSubstr"
@@ -65,8 +66,8 @@ object ExactSubstr {
     // a single-file corpus otherwise leaves the checkpoint single-split,
     // serializing the explode and both consumers' map sides; keying the
     // exchange by gram also pre-establishes the rollup/join partitioning.
-    val grams = positionedGrams(docs, idCol, textCol, k)
-      .repartition(col("gram")).localCheckpoint(false)
+    val grams = Lineage.cut(positionedGrams(docs, idCol, textCol, k)
+      .repartition(col("gram")))
     // corpus-wide occurrence count (total, not per-doc: a gram repeated
     // inside one document is duplicated text too — paper semantics)
     val dup = grams.groupBy(col("gram")).count()

@@ -2,6 +2,7 @@ package graft.textops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * Data-selection importance scoring — the DSIR recipe (Xie et al. 2023,
@@ -105,13 +106,13 @@ object Importance {
     require(hexChars >= 1 && hexChars <= 4, s"hexChars $hexChars")
     // ≤ 16^hexChars rows; cut so the totals job and the weight collect
     // don't re-tokenize the corpus
-    val freqs = docs
+    val freqs = Lineage.cut(docs
       .select(targetPred.as("_is_t"), explode(words(col(textCol))).as("_w"))
       .groupBy(bucket(col("_w"), hexChars).as("bucket"))
-      .agg(count(lit(1)).as("_nr"), count(when(col("_is_t"), lit(1))).as("_nt"))
-      .localCheckpoint(false)
+      .agg(count(lit(1)).as("_nr"), count(when(col("_is_t"), lit(1))).as("_nt")))
     val totals = freqs.agg(sum(col("_nr")), sum(col("_nt"))).head
     val (tr, tt) = (totals.getLong(0).toDouble, totals.getLong(1).toDouble)
+    require(tt > 0, "empty target sample")
     val w = freqs.select(col("bucket"),
         round(log(
           (col("_nt").cast("double") / tt + alpha) /

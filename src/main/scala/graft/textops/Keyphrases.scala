@@ -3,6 +3,7 @@ package graft.textops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /**
  * TF-IDF keyphrase extraction — the top-k most characteristic terms per
@@ -41,18 +42,17 @@ object Keyphrases {
   def tfidfTopK(docs: DataFrame, idCol: String, textCol: String, k: Int = 3,
                 normalize: Boolean = true): DataFrame = {
     val text = if (normalize) lower(col(textCol)) else col(textCol)
-    val tf = docs
+    // lineage cut: tf feeds both the df rollup and the scoring join, and
+    // column pruning makes the two subtrees differ so AQE exchange reuse
+    // never fires — without the cut the corpus tokenizes twice (the
+    // documented tx11 caveat). localCheckpoint spills MEMORY_AND_DISK
+    // (it does not pin a corpus-scale table in memory the way cache()
+    // would); the parquet-persisted [[tfidfTopKFromTf]] path remains the
+    // recommended shape when tf is wanted as a table anyway.
+    val tf = Lineage.cut(docs
       .select(col(idCol).as("doc_id"), explode(split(text, " +")).as("term"))
       .filter(length(col("term")) > 0)
-      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      // lineage cut: tf feeds both the df rollup and the scoring join, and
-      // column pruning makes the two subtrees differ so AQE exchange reuse
-      // never fires — without the cut the corpus tokenizes twice (the
-      // documented tx11 caveat). localCheckpoint spills MEMORY_AND_DISK
-      // (it does not pin a corpus-scale table in memory the way cache()
-      // would); the parquet-persisted [[tfidfTopKFromTf]] path remains the
-      // recommended shape when tf is wanted as a table anyway.
-      .localCheckpoint(false)
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
     val n = docs.agg(countDistinct(col(idCol)).as("_n"))
     tfidfTopKFromTf(tf, n, k)
   }

@@ -107,6 +107,15 @@ class CorpusStatsSpec extends SparkSpec {
     assert(mix > de1 && mix < en1, s"mixed doc lands between: $mix")
   }
 
+  test("importance: a target predicate matching no document fails loudly") {
+    val d = Seq((1L, "apple banana", "en"), (2L, "zug blitz", "de"))
+      .toDF("doc_id", "text", "lang")
+    val e = intercept[IllegalArgumentException] {
+      Importance.importanceReport(d, "doc_id", "text", col("lang") === "fr")
+    }
+    assert(e.getMessage.contains("empty target sample"))
+  }
+
   test("importance: scoreDocs is repartition-invariant and unseen buckets score 0") {
     val d = Seq((1L, "only new words here")).toDF("doc_id", "text")
     val w = Map("zz" -> 5.0) // no md5 prefix collides with a real 2-hex bucket of these words? use empty-effect map

@@ -71,35 +71,6 @@ class LinkSpec extends SparkSpec {
     assert(capped.count(_._1 == "cold") == 2 && capped.count(_._1 == "solo") == 1)
   }
 
-  test("reliable-checkpoint CC == union-find oracle; durable round files written") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_rel").toString
-    val rnd = new scala.util.Random(7)
-    val n = 60
-    val edges = (1 to 90).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      .filter(e => e._1 != e._2)
-    // union-find oracle (same contract as PropertySpec)
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElse(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val got = ConnectedComponents.run(edges.toDF("src", "dst"),
-        reliable = Some(ConnectedComponents.Reliable(dir, every = 1)))
-      .as[(Long, Long)].collect().toMap
-    val verts = edges.flatMap(e => Seq(e._1, e._2)).toSet
-    verts.foreach { v =>
-      val comp = verts.filter(u => find(u) == find(v))
-      assert(got(v) == comp.min, s"vertex $v")
-    }
-    // the durable path was actually exercised (round files on disk)
-    val rounds = new java.io.File(dir).list().count(_.startsWith("cc_round_"))
-    assert(rounds >= 2, s"expected durable round files, got $rounds")
-  }
-
   test("connected components: star and cycle converge") {
     val star = (2L to 20L).map(i => (1L, i)).toDF("src", "dst")
     val ccStar = ConnectedComponents.run(star).as[(Long, Long)].collect()

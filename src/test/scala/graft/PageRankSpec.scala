@@ -66,13 +66,4 @@ class PageRankSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("durable Reliable checkpoint path yields identical ranks") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr").toString
-    val df = Seq("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "d").toDF("src", "dst")
-    val plain = PageRank.run(df, 6).collect().map(_.toSeq).toSet
-    val durable = PageRank.run(df, 6,
-      reliable = Some(PageRank.Reliable(dir, every = 2)))
-      .collect().map(_.toSeq).toSet
-    assert(plain == durable)
-  }
 }

@@ -527,11 +527,15 @@ class PlanSpec extends SparkSpec {
 
   test("kg39 walks: each step is a partial arg-min agg, never a window") {
     import spark.implicits._
-    val edges = Seq(("a", "b"), ("b", "c"), ("c", "a")).toDF("src", "dst")
-    // cutLineage=false: the production path checkpoints each step, which
+    // the step frames, uncut: the production path cuts each step, which
     // hides the per-step aggregate behind an RDD scan in the final plan
-    val out = graft.graph.RandomWalks.walks(edges, 1.0, 2, 3, "t",
-      cutLineage = false)
+    val und = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("b", "a"), ("c", "b"), ("a", "c"))
+      .toDF("src", "dst")
+    val starts = Seq(("a", 0, "a"), ("a", 1, "a"), ("b", 0, "b"))
+      .toDF("start", "walk_idx", "node")
+    val out = (1 to 3).foldLeft(starts) { (cur, step) =>
+      graft.graph.RandomWalks.stepFrame(cur, und, "t", step)
+    }
     val p = out.queryExecution.executedPlan.toString
     assert(p.contains("partial_min"),
       s"expected map-side combine of the step arg-min struct:\n${p.take(1500)}")
@@ -541,12 +545,15 @@ class PlanSpec extends SparkSpec {
 
   test("kg38 ego-nets: per-(ego, node) top-F plans as WindowGroupLimit, joins stay equi") {
     import spark.implicits._
-    // cutLineage=false: the production path checkpoints each hop, which
+    // the hop frames, uncut: the production path cuts each hop, which
     // hides the per-hop window behind an RDD scan in the final plan
-    val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"))
-      .toDF("src", "dst")
-    val p = plan(graft.graph.EgoNets.sample(edges, 1.0, Seq(3, 2), "t",
-      cutLineage = false))
+    val und = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
+      ("b", "a"), ("c", "b"), ("a", "c"), ("d", "c")).toDF("src", "dst")
+    val seeds = Seq("a", "b", "c", "d").toDF("seed").withColumn("node", $"seed")
+    val hop1 = graft.graph.EgoNets.hopFrame(seeds, und, "t", 3, 1)
+    val hop2 = graft.graph.EgoNets.hopFrame(
+      hop1.select($"seed", $"dst".as("node")).distinct(), und, "t", 2, 2)
+    val p = plan(hop1.unionByName(hop2))
     // the fan-out cap must run as WindowGroupLimit (partial top-F
     // map-side before the exchange — hub nodes ship F rows per ego,
     // never their degree), one per hop
@@ -554,6 +561,11 @@ class PlanSpec extends SparkSpec {
       s"fanout cap must be WindowGroupLimit:\n${p.take(1500)}")
     assert(!p.contains("CartesianProduct"),
       s"frontier expansion must stay an equi-join:\n${p.take(1500)}")
+  }
+
+  test("PlanDump: a wrong argument count fails with the usage line") {
+    val e = intercept[IllegalArgumentException](PlanDump.main(Array("only-one")))
+    assert(e.getMessage.contains("usage: PlanDump"))
   }
 
   test("kg37 asOf: horizon is a one-row broadcast; the interval table never reshuffles") {
