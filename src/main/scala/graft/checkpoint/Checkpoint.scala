@@ -59,18 +59,12 @@ object Checkpoint {
     fs.exists(new Path(p, "_SUCCESS")) && fs.exists(new Path(p, "_metrics.json"))
   }
 
-  /**
-   * Run (or resume) a stage. `partitionCols` buckets the output so downstream
-   * resume reads are partition-pruned (reference gap: its .ser blob had no
-   * pruning; SURVEY.md §7 stage 7).
-   */
-  def stage(spark: SparkSession, dir: String, name: String,
-            partitionCols: Seq[String] = Nil)(compute: => DataFrame): DataFrame = {
+  /** Run (or resume) a stage: compute and write it unless a complete copy
+    * exists, then read it back. */
+  def stage(spark: SparkSession, dir: String, name: String)(compute: => DataFrame): DataFrame = {
     val p = stagePath(dir, name)
     if (!isComplete(spark, dir, name)) {
-      val df = compute
-      val w = df.write.mode("overwrite")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(p)
+      compute.write.mode("overwrite").parquet(p)
       writeMetrics(spark, name, p, p)
     }
     spark.read.parquet(p)

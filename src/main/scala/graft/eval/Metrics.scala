@@ -105,7 +105,8 @@ object Metrics {
    * @param found  blocker-surfaced pairs in the same canonical form
    * @return one row: (n_docs, n_true_pairs, n_found_pairs, n_caught,
    *         pairs_completeness, reduction_ratio), ratios 6 dp;
-   *         completeness is 1.0 by convention on an empty truth set.
+   *         completeness is 1.0 by convention on an empty truth set;
+   *         fewer than 2 docs raise [[TooFewDocs]] when evaluated.
    */
   def blockingQuality(docs: DataFrame, idCol: String,
                       truth: DataFrame, found: DataFrame): DataFrame = {
@@ -120,8 +121,12 @@ object Metrics {
         round(when(col("n_true_pairs") === 0, 1.0)
           .otherwise(col("n_caught").cast("double") / col("n_true_pairs")), 6)
           .as("pairs_completeness"),
-        round(lit(1.0) - col("n_found_pairs").cast("double") /
-          (col("n_docs").cast("double") * (col("n_docs") - 1) / 2.0), 6)
+        when(col("n_docs") < 2, raise_error(lit(TooFewDocs)))
+          .otherwise(round(lit(1.0) - col("n_found_pairs").cast("double") /
+            (col("n_docs").cast("double") * (col("n_docs") - 1) / 2.0), 6))
           .as("reduction_ratio"))
   }
+
+  /** [[blockingQuality]]'s error on fewer than 2 docs. */
+  val TooFewDocs = "blockingQuality: reduction_ratio needs at least 2 documents"
 }

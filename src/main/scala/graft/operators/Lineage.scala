@@ -19,7 +19,9 @@ import org.apache.spark.sql.DataFrame
  *    costs at most `DurableEvery` rounds of recompute; other rounds stay
  *    local. One-shot cuts pass round 0 and are always durable.
  *
- * Durable round files are not deleted (a result may still read them
+ * Local cut blocks are freed by Spark's context cleaner once the cut frame
+ * and every frame derived from it are unreachable; hold the frame to keep
+ * them. Durable round files are not deleted (a result may still read them
  * lazily, e.g. the walk corpus unions every step), and a durable cut
  * drops the frame's output partitioning.
  */

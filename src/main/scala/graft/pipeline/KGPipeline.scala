@@ -7,6 +7,7 @@ import graft.extract.Extraction
 import graft.graph.Materialize
 import graft.ingest.Transcripts
 import graft.link.{Canonicalize, MinHashBlocking}
+import graft.operators.Lineage
 import graft.schemadisc.SchemaDiscovery
 
 /**
@@ -20,6 +21,15 @@ import graft.schemadisc.SchemaDiscovery
  * `_metrics.json` lineage sidecar ([[Checkpoint]]), so a killed run resumes
  * at the stage it died in — the distributed rebuild of cs562_sdpg's
  * serialized-HashMap resume loop (`src2/main/scala/Main.scala:37-50`).
+ *
+ * Sharing: the five stages that more than one later stage reads
+ * (`triples_raw`, `mentions`, `pairs`, `entities`, `canonical_triples`)
+ * are computed once — read back from their stage Parquet when
+ * `checkpointDir` is set, else cut with [[Lineage.cut]]; the input of
+ * [[runFromTriples]] is the caller's and is not cut. Cut blocks are freed
+ * once the [[Result]] is unreachable (hold it to keep them) and die with
+ * their executor; `spark.graft.checkpointDir` ([[Config.fromSession]])
+ * gives the Parquet-backed, fault-tolerant posture.
  */
 object KGPipeline {
 
@@ -33,17 +43,7 @@ object KGPipeline {
         * (a single 10^6-turn conv would otherwise serialize one task) while
         * keeping conv-locality. Off by default — only worth an exchange when
         * the input's own file partitioning is skewed. */
-      repartitionInput: Option[Int] = None,
-      /** Cache the SMALL multi-consumer stages (mentions, entities — a few
-        * rows per distinct normalized mention). Checkpointed runs get the
-        * same effect from the stage parquet. */
-      cacheIntermediate: Boolean = true,
-      /** Also cache the LARGE stages (triples_raw, canonical_triples).
-        * Measured: the columnar cache build of an 8M-row triple table costs
-        * more than recomputing its (codegen) extraction DAG twice — so this
-        * is off by default and only worth it when MANY consumers follow
-        * (e.g. the driver-contract kg4/kg5/kg6/kg7 query family). */
-      cacheLarge: Boolean = false)
+      repartitionInput: Option[Int] = None)
 
   object Config {
     /** Build a Config from `spark.graft.*` session confs — the
@@ -60,9 +60,7 @@ object KGPipeline {
         checkpointDir = opt("checkpointDir"),
         shingleSize = opt("shingleSize").map(_.toInt).getOrElse(3),
         maxBucket = opt("maxBucket").map(_.toInt).getOrElse(10000),
-        repartitionInput = opt("repartitionInput").map(_.toInt),
-        cacheIntermediate = opt("cacheIntermediate").forall(_.toBoolean),
-        cacheLarge = opt("cacheLarge").exists(_.toBoolean))
+        repartitionInput = opt("repartitionInput").map(_.toInt))
     }
   }
 
@@ -78,45 +76,40 @@ object KGPipeline {
       edgeSchema: DataFrame,
       tripleSet: DataFrame)
 
+  /** One stage: Parquet-backed under `checkpointDir`, else lazy; a `shared`
+    * stage (read by more than one later stage) is then lineage-cut. */
+  private def stage(spark: SparkSession, cfg: Config, name: String, shared: Boolean = false)
+                   (f: => DataFrame): DataFrame =
+    cfg.checkpointDir match {
+      case Some(d) => Checkpoint.stage(spark, d, name)(f)
+      case None if shared => Lineage.cut(f)
+      case None => f
+    }
+
   def run(spark: SparkSession, transcripts: DataFrame,
           cfg: Config = Config()): Result = {
-    def stage(name: String, parts: Seq[String] = Nil)(f: => DataFrame): DataFrame =
-      cfg.checkpointDir match {
-        case Some(d) => Checkpoint.stage(spark, d, name, parts)(f)
-        case None => f
-      }
     val input = cfg.repartitionInput match {
       case Some(n) => Transcripts.repartitionForScale(transcripts, n)
       case None => transcripts
     }
     val turns = Transcripts.stableTurns(input)
-    runFromTriples(spark, stage("triples_raw") { Extraction.triplesRaw(turns) }, cfg)
+    runFromTriples(spark,
+      stage(spark, cfg, "triples_raw", shared = true) { Extraction.triplesRaw(turns) }, cfg)
   }
 
   /** Downstream stages over an already-extracted raw-triple table (entry
     * point for the incremental path, [[Incremental.finalizeGraph]]). */
-  def runFromTriples(spark: SparkSession, triplesRawIn: DataFrame,
+  def runFromTriples(spark: SparkSession, triplesRaw: DataFrame,
                      cfg: Config = Config()): Result = {
+    def shared(name: String)(f: => DataFrame) = stage(spark, cfg, name, shared = true)(f)
+    def single(name: String)(f: => DataFrame) = stage(spark, cfg, name)(f)
 
-    def stage(name: String, parts: Seq[String] = Nil)(f: => DataFrame): DataFrame =
-      cfg.checkpointDir match {
-        case Some(d) => Checkpoint.stage(spark, d, name, parts)(f)
-        case None => f
-      }
-    // multi-consumer stages: cache only when not already parquet-backed
-    def shared(df: DataFrame): DataFrame =
-      if (cfg.cacheIntermediate && cfg.checkpointDir.isEmpty) df.cache() else df
-    def sharedLarge(df: DataFrame): DataFrame =
-      if (cfg.cacheLarge && cfg.checkpointDir.isEmpty) df.cache() else df
-
-    val triplesRaw = sharedLarge(triplesRawIn)
-
-    val mentions = shared(stage("mentions") {
+    val mentions = shared("mentions") {
       Extraction.mentions(triplesRaw)
         .withColumn("shingles", MinHashBlocking.shingles(col("norm"), cfg.shingleSize))
-    })
+    }
 
-    val pairs = stage("pairs") {
+    val pairs = shared("pairs") {
       MinHashBlocking.candidatePairs(
         mentions, "mention_id", "shingles",
         threshold = cfg.jaccardThreshold,
@@ -124,19 +117,19 @@ object KGPipeline {
         maxBucket = cfg.maxBucket)
     }
 
-    val entities = shared(stage("entities") {
+    val entities = shared("entities") {
       Canonicalize.entities(mentions.drop("shingles"), pairs)
-    })
+    }
 
-    val canonicalTriples = sharedLarge(stage("canonical_triples") {
+    val canonicalTriples = shared("canonical_triples") {
       Canonicalize.canonicalTriples(triplesRaw, entities)
-    })
+    }
 
-    val nodes = stage("nodes") { Materialize.nodes(canonicalTriples, entities) }
-    val edges = stage("edges") { Materialize.edges(canonicalTriples) }
-    val nodeSchema = stage("node_schema") { SchemaDiscovery.nodeTypeSchema(canonicalTriples) }
-    val edgeSchema = stage("edge_schema") { SchemaDiscovery.edgeTypes(canonicalTriples) }
-    val tripleSet = stage("triple_set") { Materialize.tripleSet(canonicalTriples) }
+    val nodes = single("nodes") { Materialize.nodes(canonicalTriples, entities) }
+    val edges = single("edges") { Materialize.edges(canonicalTriples) }
+    val nodeSchema = single("node_schema") { SchemaDiscovery.nodeTypeSchema(canonicalTriples) }
+    val edgeSchema = single("edge_schema") { SchemaDiscovery.edgeTypes(canonicalTriples) }
+    val tripleSet = single("triple_set") { Materialize.tripleSet(canonicalTriples) }
 
     Result(triplesRaw, mentions, pairs, entities, canonicalTriples,
       nodes, edges, nodeSchema, edgeSchema, tripleSet)

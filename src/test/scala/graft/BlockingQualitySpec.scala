@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import graft.eval.Metrics
 
 class BlockingQualitySpec extends SparkSpec {
@@ -8,7 +9,7 @@ class BlockingQualitySpec extends SparkSpec {
   private val docs = (1L to 5L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
   private def pairs(ps: (Long, Long)*) = ps.toDF("id_a", "id_b")
 
-  private def row(truth: Seq[(Long, Long)], found: Seq[(Long, Long)]) =
+  private def row(truth: Seq[(Long, Long)], found: Seq[(Long, Long)], docs: DataFrame = docs) =
     Metrics.blockingQuality(docs, "doc_id", pairs(truth: _*), pairs(found: _*))
       .as[(Long, Long, Long, Long, Double, Double)].collect().toSeq
 
@@ -30,4 +31,16 @@ class BlockingQualitySpec extends SparkSpec {
   test("empty found set: zero caught, reduction 1.0") {
     assert(row(Seq((1L, 2L)), Seq.empty) == Seq((5L, 1L, 0L, 0L, 0.0, 1.0)))
   }
+
+  for (n <- Seq(0, 1); ansi <- Seq(true, false))
+    test(s"$n docs, ANSI ${if (ansi) "on" else "off"}: named error, not a division by zero") {
+      val few = docs.limit(n)
+      val prev = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      val err = try intercept[Exception](row(Seq.empty, Seq.empty, few))
+        finally spark.conf.set("spark.sql.ansi.enabled", prev)
+      val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).toSeq
+      assert(chain.exists(_.contains(Metrics.TooFewDocs)), chain.mkString("\n"))
+    }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, RDDScanExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.eval.Metrics
 import graft.extract.Extraction
@@ -223,6 +226,56 @@ class KGPipelineSpec extends SparkSpec {
   test("determinism: rerunning the pipeline yields the identical triple set") {
     val again = KGPipeline.run(spark, transcripts)
     assert(Metrics.triplePR(again.tripleSet, result.tripleSet).f1 == 1.0)
+  }
+
+  private def frames(r: KGPipeline.Result): Seq[(String, DataFrame)] = Seq(
+    "triples_raw" -> r.triplesRaw, "mentions" -> r.mentions, "pairs" -> r.pairs,
+    "entities" -> r.entities, "canonical_triples" -> r.canonicalTriples,
+    "nodes" -> r.nodes, "edges" -> r.edges, "node_schema" -> r.nodeSchema,
+    "edge_schema" -> r.edgeSchema, "triple_set" -> r.tripleSet)
+
+  test("each shared stage is computed once: downstream frames read the cut, not the input") {
+    val in = java.nio.file.Files.createTempDirectory("graft_kg_once").toString
+    transcripts.write.mode("overwrite").parquet(in)
+    val r = KGPipeline.run(spark, spark.read.parquet(in))
+    object aqe extends AdaptiveSparkPlanHelper
+    for ((name, df) <- frames(r).drop(5)) {
+      df.collect()
+      val p = df.queryExecution.executedPlan
+      assert(aqe.collect(p) { case g: GenerateExec => g }.isEmpty,
+        s"$name re-runs extraction:\n$p")
+      assert(aqe.collect(p) { case s: FileSourceScanExec => s }.isEmpty,
+        s"$name re-scans the transcript input:\n$p")
+      assert(aqe.collect(p) { case s: RDDScanExec => s }.nonEmpty,
+        s"$name does not read a cut stage:\n$p")
+    }
+  }
+
+  test("lineage-cut run == Parquet-checkpointed run, frame by frame") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_kg_ckpt").toString
+    val ckpt = KGPipeline.run(spark, transcripts, KGPipeline.Config(checkpointDir = Some(dir)))
+    // order-insensitive: collected row multisets (the frames are small)
+    def bag(df: DataFrame) =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (row, n) => row -> n.size }
+    for (((name, a), (_, b)) <- frames(result).zip(frames(ckpt)))
+      assert(a.columns.sameElements(b.columns) && bag(a) == bag(b),
+        s"$name differs between the cut and the checkpointed run")
+  }
+
+  test("SparkEntry memo keeps only the latest sfDir") {
+    def sfDir(users: Int): String = {
+      val d = java.nio.file.Files.createTempDirectory("graft_memo").toString
+      spark.range(users * 10).select((col("id") % users).as("user_id"), col("id").as("event_id"),
+          lit("click").as("event_type"), timestamp_seconds(col("id") * 60).as("ts"))
+        .write.parquet(s"$d/events.parquet")
+      d
+    }
+    val (a, b) = (sfDir(20), sfDir(30))
+    // dir A memoizes the turns frame and the whole pipeline Result
+    SparkEntry.queries("kg4_triple_set")(spark, a).count()
+    assert(SparkEntry.memoDirs == Set(a))
+    SparkEntry.queries("kg1_transcripts")(spark, b).count()
+    assert(SparkEntry.memoDirs == Set(b), "a dir-A memo entry survived a query on dir B")
   }
 
   test("repartitionInput (salted range partitioning) changes nothing semantically") {

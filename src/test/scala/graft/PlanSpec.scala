@@ -67,7 +67,12 @@ class PlanSpec extends SparkSpec {
     // the plan must leave the strategy to AQE (Canonicalize.canonicalTriples)
     val tr = graft.fixtures.TranscriptGen.transcripts(spark, 30)
     val res = graft.pipeline.KGPipeline.run(spark, tr)
-    val hints = res.canonicalTriples.queryExecution.analyzed.collect {
+    // res.canonicalTriples is a lineage cut (no join left to inspect):
+    // plan the stage's join itself over the pipeline's own inputs
+    val canon = graft.link.Canonicalize.canonicalTriples(res.triplesRaw, res.entities)
+    assert(canon.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]), "the join is planned")
+    val hints = canon.queryExecution.analyzed.collect {
       case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
     }
     assert(hints.isEmpty, s"expected no join hints, got: $hints")
