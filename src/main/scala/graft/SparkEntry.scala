@@ -833,10 +833,11 @@ object SparkEntry {
     "er3_match_scores" -> ((s, dir) => er3Scored(s, dir)),
 
     // end-to-end ER capstone: er3 scores ≥ τ become links, links become
-    // clusters via the same large/small-star connected components the KG
-    // canonicalization runs; output is the doc→cluster assignment table
-    // with cluster sizes — block → score → threshold → cluster, the full
-    // Fellegi–Sunter pipeline as one query (oracle CC = recursive CTE)
+    // clusters via the same connected components the KG canonicalization
+    // runs (large/small-star rounds with a one-task union-find finish);
+    // output is the doc→cluster assignment table with cluster sizes —
+    // block → score → threshold → cluster, the full Fellegi–Sunter
+    // pipeline as one query (oracle CC = recursive CTE)
     "er4_er_clusters" -> ((s, dir) => {
       val links = er3Scored(s, dir).filter(col("score") >= 2.0)
         .select(col("id_a").as("src"), col("id_b").as("dst"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.eval.Metrics
 import graft.noise.Noise
@@ -63,6 +64,19 @@ class DiscoveryAndMetricsSpec extends SparkSpec {
     assert(n1.filter(col("id").isNull).count() == 0, "id columns exempt")
     val nulled = n1.filter(col("payload").isNull).count()
     assert(nulled > 350 && nulled < 650, s"~50% nulled, got $nulled")
+  }
+
+  test("noise: same rows at any partition layout (addNoise and addTypos)") {
+    val df = spark.range(2000).select(
+      col("id"), concat(lit("value"), col("id") % 37).as("val"), (col("id") % 5).as("k"))
+    def multiset(d: DataFrame) =
+      d.collect().map(_.toSeq).groupBy(identity).map { case (r, rs) => r -> rs.length }
+    def sameAt1And7(f: DataFrame => DataFrame) = {
+      val (one, seven) = (multiset(f(df.repartition(1))), multiset(f(df.repartition(7))))
+      assert(one == seven, s"${(one.toSet diff seven.toSet).size} rows differ")
+    }
+    sameAt1And7(Noise.addNoise(_, 0.4, seed = 5L))
+    sameAt1And7(Noise.addTypos(_, Seq("val"), 0.4, seed = 5L))
   }
 
   test("noise robustness: recall stays 1.0 under cell noise (reference sweep)") {

@@ -34,9 +34,10 @@ class LineageSpec extends SparkSpec {
       .filter(e => e._1 != e._2)
   private def edges: DataFrame = edgeSeq.toDF("src", "dst")
 
-  // ≥ 6 rounds, so the fixed-round loops also reach durable round 5
+  // ≥ 6 rounds, so the fixed-round loops also reach durable round 5; CC
+  // runs star rounds only (these graphs are far below its union-find limit)
   private val operators: Seq[(String, DataFrame => DataFrame)] = Seq(
-    "ConnectedComponents" -> (e => ConnectedComponents.run(e)),
+    "ConnectedComponents" -> (e => ConnectedComponents.run(e, localFinishEdges = 0)),
     "PageRank" -> (e => PageRank.run(e, 6)),
     "Hits" -> (e => Hits.run(e, 6)),
     "LabelPropagation" -> (e => LabelPropagation.run(e, 6)),
@@ -95,15 +96,23 @@ class LineageSpec extends SparkSpec {
   }
 
   test("two CC runs on one dir keep their own rounds; the first collected last") {
-    // a 16-node path converges in exactly 5 rounds, so each result reads
-    // its last (durable) round lazily
+    // a 16-node path converges in exactly 5 star rounds, so each result
+    // reads its last (durable) round lazily
     def path(from: Long) = (from until from + 15).map(i => (i, i + 1)).toDF("src", "dst")
-    val ((a, b), _) = durable {
-      (ConnectedComponents.run(path(1L)), ConnectedComponents.run(path(101L)))
-    }
+    def cc(from: Long) = ConnectedComponents.run(path(from), localFinishEdges = 0)
+    val ((a, b), _) = durable((cc(1L), cc(101L)))
     assert(a.queryExecution.executedPlan.toString.toLowerCase.contains("parquet"),
       "the first result should read a durable round")
     assert(rows(b) == (101L to 116L).map(i => Seq[Any](i, 101L)).toSet)
     assert(rows(a) == (1L to 16L).map(i => Seq[Any](i, 1L)).toSet)
+  }
+
+  test("CC union-find finish under the conf reads the durable round-0 cut") {
+    val local = rows(ConnectedComponents.run(edges))
+    val (res, dir) = durable(ConnectedComponents.run(edges))
+    assert(res.queryExecution.executedPlan.toString.toLowerCase.contains("parquet"),
+      "the union-find task should read the durable input cut")
+    assert(lineageFiles(dir).size == 1, "only the input cut is written")
+    assert(rows(res) == local)
   }
 }

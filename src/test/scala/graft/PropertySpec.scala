@@ -28,26 +28,38 @@ class PropertySpec extends SparkSpec {
     (0L until n.toLong).map(v => v -> find(v)).toMap
   }
 
-  test("connected components == union-find oracle on random graphs") {
-    val genGraph = for {
-      n <- Gen.choose(2, 40)
-      m <- Gen.choose(0, 60)
-      edges <- Gen.listOfN(m, for {
-        a <- Gen.choose(0L, n - 1L); b <- Gen.choose(0L, n - 1L)
-      } yield (a, b))
-    } yield (n, edges.filter(e => e._1 != e._2))
+  // test-name suffix -> limit for a graph on v vertices: the default
+  // union-find finish, star rounds only, and v - 1. The star fixpoint has
+  // v - #components <= v - 1 edges, so a graph that starts above v - 1
+  // edges switches to union-find after one or more rounds, before the
+  // round that would confirm the fixpoint.
+  Seq[(String, Int => Long)](
+    "" -> (_ => ConnectedComponents.LocalFinishEdges),
+    " (star rounds)" -> (_ => 0L),
+    " (switch after some star rounds)" -> (v => v - 1L)).foreach { case (path, limitFor) =>
+    test(s"connected components == union-find oracle on random graphs$path") {
+      val genGraph = for {
+        n <- Gen.choose(2, 40)
+        m <- Gen.choose(0, 60)
+        edges <- Gen.listOfN(m, for {
+          a <- Gen.choose(0L, n - 1L); b <- Gen.choose(0L, n - 1L)
+        } yield (a, b))
+      } yield (n, edges.filter(e => e._1 != e._2))
 
-    samples(genGraph, 15).foreach { case (n, edges) =>
-      if (edges.nonEmpty) {
-        val got = ConnectedComponents.run(edges.toDF("src", "dst"))
-          .as[(Long, Long)].collect().toMap
-        val oracle = unionFind(n, edges)
-        // CC only reports vertices that appear in edges
-        val verts = edges.flatMap(e => Seq(e._1, e._2)).toSet
-        verts.foreach { v =>
-          // canonical id must be the component MINIMUM per the contract
-          val comp = verts.filter(u => oracle(u) == oracle(v))
-          assert(got(v) == comp.min, s"vertex $v in graph(n=$n, edges=$edges)")
+      samples(genGraph, 15).foreach { case (n, edges) =>
+        if (edges.nonEmpty) {
+          // CC reports each vertex that appears in edges exactly once
+          val verts = edges.flatMap(e => Seq(e._1, e._2)).toSet
+          val rows = ConnectedComponents.run(edges.toDF("src", "dst"),
+            localFinishEdges = limitFor(verts.size)).as[(Long, Long)].collect()
+          val got = rows.toMap
+          val oracle = unionFind(n, edges)
+          assert(rows.length == verts.size && got.keySet == verts, s"graph(n=$n, edges=$edges)")
+          verts.foreach { v =>
+            // canonical id must be the component MINIMUM per the contract
+            val comp = verts.filter(u => oracle(u) == oracle(v))
+            assert(got(v) == comp.min, s"vertex $v in graph(n=$n, edges=$edges)")
+          }
         }
       }
     }
